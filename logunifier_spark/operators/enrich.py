@@ -14,6 +14,9 @@
 
 from __future__ import annotations
 
+import functools
+
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,7 +38,13 @@ PATTERN_LABELS_SCHEMA = "pattern_key string, enr_service_type string, sink strin
 
 
 def default_pattern_labels(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(DEFAULT_PATTERN_LABELS, PATTERN_LABELS_SCHEMA)
+    """The default dimension as a LocalRelation: built from pandas (Arrow
+    transfer on) the rows live in the plan itself. From a Python list
+    createDataFrame builds a LogicalRDD, and every action re-runs Python
+    worker tasks just to unpickle these 8 rows."""
+    pdf = pd.DataFrame(DEFAULT_PATTERN_LABELS,
+                       columns=["pattern_key", "enr_service_type", "sink", "enr_org_name"])
+    return spark.createDataFrame(pdf, PATTERN_LABELS_SCHEMA)
 
 
 def enrich_with_pattern_labels(df: DataFrame, pattern_labels: DataFrame) -> DataFrame:
@@ -46,22 +55,30 @@ def enrich_with_pattern_labels(df: DataFrame, pattern_labels: DataFrame) -> Data
         df["log_pattern_key"] == pattern_labels["pattern_key"],
         "left",
     ).drop(pattern_labels["pattern_key"])
-    return joined.withColumns({
+    return joined.withColumns(_fill_cols()).drop("enr_service_type", "enr_org_name")
+
+
+@functools.cache
+def _fill_cols() -> dict[str, Column]:
+    # built once per process; the dict is shared: never mutate it
+    return {
         "service_type": F.coalesce(F.nullif(F.col("service_type"), F.lit("")),
                                    F.col("enr_service_type")),
         "org_name": F.coalesce(F.nullif(F.col("org_name"), F.lit("")),
                                F.col("enr_org_name")),
         "sink": F.coalesce(F.col("sink"), F.lit("loki_errors")),
-    }).drop("enr_service_type", "enr_org_name")
+    }
 
 
 def _bool_str(c: Column) -> Column:
     return F.when(c, F.lit("true")).otherwise(F.lit("false"))
 
 
+@functools.cache
 def loki_label_map() -> Column:
     """The 14-label Loki index set (lokishipper.go:284-306) + conditional
-    error_type, as a map<string,string> column over the unified schema."""
+    error_type, as a map<string,string> column over the unified schema
+    (built once per process)."""
     has_proc = F.col("process_error_reason").isNotNull() & (F.col("process_error_reason") != "")
     has_val = F.col("validation_errors").isNotNull() & (F.col("validation_errors") != "")
     has_stack = F.col("error_stack_trace").isNotNull() & (F.col("error_stack_trace") != "")
@@ -166,12 +183,13 @@ def stream_key(label_map: Column) -> Column:
     )
 
 
+@functools.cache
 def stream_key_native() -> Column:
     """The same canonical stream key built directly from the unified scalar
     columns: the 14 label keys (+ conditional error_type) are compile-time
     constants, so the sorted order is static and the whole key is one
     codegen-friendly concat — byte-identical to
-    stream_key(loki_label_map())."""
+    stream_key(loki_label_map()). Built once per process."""
     has_proc = F.col("process_error_reason").isNotNull() & (F.col("process_error_reason") != "")
     has_val = F.col("validation_errors").isNotNull() & (F.col("validation_errors") != "")
     has_stack = F.col("error_stack_trace").isNotNull() & (F.col("error_stack_trace") != "")

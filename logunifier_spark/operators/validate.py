@@ -12,6 +12,8 @@ reference's ``struct == nil || len(field) == 0`` checks.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -22,6 +24,7 @@ from logunifier_spark.functions.levels import (
     LEVEL_TO_EMOJI,
 )
 
+@functools.cache
 def _emoji_map() -> Column:
     # built lazily: F.lit needs an active SparkContext
     return F.create_map(*[F.lit(x) for kv in LEVEL_TO_EMOJI.items() for x in kv])
@@ -34,6 +37,15 @@ def _unset(c: Column) -> Column:
 def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
     """Apply the 12 checks in reference order; accumulate messages; apply
     defaults; clear empty processError/validationError; set marker emojis."""
+    for cols in _projections(fallback_ts_col):
+        df = df.withColumns(cols)
+    return df
+
+
+@functools.cache
+def _projections(fallback_ts_col: str) -> tuple[dict[str, Column], ...]:
+    """validate_and_fix's three projections, built once per process (the
+    returned dicts are shared: never mutate them)."""
     checks: list[tuple[Column, str]] = [
         (_unset(F.col("log_ingress")), "Ingress is empty"),
         (_unset(F.col("org_name")), "No organisation name set"),
@@ -63,7 +75,7 @@ def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
     def dflt(c: str, v: str) -> Column:
         return F.coalesce(F.nullif(F.col(c), F.lit("")), F.lit(v)).alias(c)
 
-    out = df.withColumns({
+    fixed = {
         "validation_errors": validation,
         "log_ingress": dflt("log_ingress", "Empty"),
         "org_name": dflt("org_name", "NoOrg"),
@@ -79,15 +91,15 @@ def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
         "service_stack": dflt("service_stack", "NoStack"),
         "service_namespace": dflt("service_namespace", "NoNameSpace"),
         "host_name": dflt("host_name", "NoHost"),
-    })
+    }
 
     # clear empty processError (validate.go:70-77): nil when no reason
     no_proc = _unset(F.col("process_error_reason"))
-    out = out.withColumns({
+    cleared = {
         "process_error_reason": F.when(~no_proc, F.col("process_error_reason")),
         "process_error_subject": F.when(~no_proc, F.col("process_error_subject")),
         "process_error_raw_data": F.when(~no_proc, F.col("process_error_raw_data")),
-    })
+    }
 
     # SetMarkerEmojis + SetMarkerApm (extensions.go:183-198)
     emoji = F.element_at(_emoji_map(), F.col("log_level"))
@@ -97,4 +109,4 @@ def validate_and_fix(df: DataFrame, fallback_ts_col: str = "ts") -> DataFrame:
                    F.concat(emoji, F.lit(" " + EMOJI_STACKTRACE))).otherwise(emoji)
     emoji = F.when(~_unset(F.col("trace_id")),
                    F.concat(emoji, F.lit(" " + EMOJI_APM))).otherwise(emoji)
-    return out.withColumn("log_level_emoji", emoji)
+    return fixed, cleared, {"log_level_emoji": emoji}

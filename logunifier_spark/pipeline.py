@@ -20,6 +20,8 @@ the caller asks for (routing / aggregation).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -45,10 +47,12 @@ DEFAULT_SUBJECT = "ingress.logs.transcripts"
 ANSI_RE = ("[\\x1b\\x9b][\\[\\]()#;?]*(?:(?:(?:[a-zA-Z\\d]*(?:;[a-zA-Z\\d]*)*)?\\x07)"
            "|(?:(?:\\d{1,4}(?:;\\d{0,4})*)?[\\dA-PRZcf-ntqry=><~]))")
 
+@functools.cache
 def _pattern_key_map() -> Column:
     return F.create_map(*[F.lit(x) for kv in STRING_TO_PATTERN_KEY.items() for x in kv])
 
 
+@functools.cache
 def _level_alias_map() -> Column:
     return F.create_map(*[F.lit(x) for kv in STRING_TO_LEVEL.items() for x in kv])
 
@@ -66,29 +70,7 @@ def _e(j: Column, *path: str) -> Column:
     return c
 
 
-_IN_MEMORY_LEAVES = {"Range", "LocalRelation", "OneRowRelation"}
-
-
-def _is_file_backed(df: DataFrame) -> bool:
-    """True iff the plan reads any external file/table source (parquet,
-    Iceberg, JDBC, ...) — the inputs whose re-scan is I/O-priced. Decided
-    from the LEAF NODE CLASSES of the optimized plan (a substring test on
-    the plan string falsely matches format names inside data literals);
-    purely in-memory sources (range, LocalRelation) regenerate cheaply."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()  # noqa: SLF001
-        it = leaves.iterator()
-        while it.hasNext():
-            cls = it.next().getClass().getSimpleName().replace("$", "")
-            if cls not in _IN_MEMORY_LEAVES:
-                return True
-        return False
-    except Exception:  # noqa: BLE001 — conservative on exotic frontends
-        return True
-
-
-def _dedup_turns(df: DataFrame, keys: list[str] | None = None,
-                 probe: bool | None = None) -> DataFrame:
+def _dedup_turns(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """JetStream duplicate-window analog (streamcfg.go:30), keyed on the
     stable turn id, built for the rare-duplicate case.
 
@@ -99,24 +81,22 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None,
 
       1. count rows per 64-bit KEY-HASH — a NARROW hash aggregate (long
          key, long buffer) whose shuffle carries only (key_hash, count),
-      2. broadcast the (normally tiny) set of key-hashes that actually
-         have duplicates,
-      3. pass every clean row through UNSHUFFLED via broadcast anti-join,
-      4. dedupe only the duplicate subset with a deterministic
+      2. probe it eagerly with isEmpty: when no key has duplicates (the
+         common case) the input is returned untouched,
+      3. otherwise broadcast the (normally tiny) set of key-hashes that
+         actually have duplicates, pass every clean row through UNSHUFFLED
+         via broadcast anti-join,
+      4. and dedupe only the duplicate subset with a deterministic
          max-payload-hash winner.
 
-    `probe` (default auto): for FILE-BACKED inputs an eager isEmpty probe
-    of the dup-key aggregate runs first and, when no key has duplicates
-    (the common case), returns the input untouched — one narrow
-    column-pruned read instead of the two full anti/semi scans. For
-    in-memory inputs (range/LocalRelation — benches, synthetics) the probe
-    is a net LOSS (measured +0.7 s/1M turns: a sequential job barrier vs
-    cheap regeneration), so auto skips it and keeps the fused single-job
-    plan, which is correct either way. The probe is deliberately NOT
-    localCheckpoint'ed: checkpoint blocks die with their executor, while
-    the duplicates-present path just recomputes the cheap aggregate inside
-    its joins with full lineage fault tolerance. NOTE: with the probe,
-    CONSTRUCTING a plan through unify() runs one narrow Spark job.
+    The probe runs for every input, in-memory ones included: without it
+    the fused anti/semi/union plan evaluates the parse UDF under both union
+    branches (2 ArrowEvalPython nodes), regenerates the input three times
+    and computes the dup-hash aggregate twice. The probe is deliberately
+    NOT localCheckpoint'ed: checkpoint blocks die with their executor,
+    while the duplicates-present path just recomputes the cheap aggregate
+    inside its joins with full lineage fault tolerance. NOTE: CONSTRUCTING
+    a plan through unify() runs one narrow Spark job.
 
     At 10^12 turns the full input never shuffles for dedup; only key
     triples do. If duplicates are pathologically common the broadcast is
@@ -132,13 +112,11 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None,
     # winners path, where the aggregate groups by the TRUE key columns
     # and passes it through intact (expected extra rows at 10^12 inputs:
     # n²/2^65 ≈ tens of thousands — noise).
-    kh = F.xxhash64(*[F.col(k) for k in keys])
+    kh = _key_hash(tuple(keys))
     dup_hashes = (df.select(kh.alias("_kh")).groupBy("_kh")
                     .agg(F.count("*").alias("_n"))
                     .where(F.col("_n") > 1).select("_kh"))
-    if probe is None:
-        probe = _is_file_backed(df)
-    if probe and dup_hashes.isEmpty():
+    if dup_hashes.isEmpty():
         return df
     dfh = df.withColumn("_kh", kh)
     clean = dfh.join(F.broadcast(dup_hashes), "_kh", "left_anti")
@@ -153,45 +131,39 @@ def _dedup_turns(df: DataFrame, keys: list[str] | None = None,
     return clean.select(*df.columns).unionByName(winners)
 
 
-def unify(
-    transcripts: DataFrame,
-    pattern_labels: DataFrame | None = None,
-    subject: str = DEFAULT_SUBJECT,
-    strip_ansi: bool = False,
-    dedup: bool = True,
-    fallback_level: Column | None = None,
-    overrides: dict | None = None,
-    dedup_keys: list[str] | None = None,
-) -> DataFrame:
-    """Transcripts (conv_id, turn_idx, role, text, tool, ts) → unified rows
-    (UNIFIED_SCHEMA [+ sink/loki_labels/stream_key when pattern_labels given]).
+# Column templates. Every Column unify() applies that does not depend on
+# the input frame is built once per process by a cached builder keyed on
+# plain values only: rebuilding them cost ~8k py4j round trips per call
+# (each pyspark.sql.functions call is one or more, plus a recorded call
+# site). Templates reference columns by NAME (F.col), never through a
+# frame (df["x"]), so they resolve against whichever frame they are
+# applied to. The returned dicts are shared: never mutate them.
 
-    `fallback_level` is the level used when no extractor set one (the
-    reference's MetaLog fallback, PRIORITY-derived for journald;
-    default 'unknown'). `overrides` (name → Column over the input frame)
-    are applied after envelope assembly but BEFORE enrich/validate — the
-    journald metadata-override hook (journald.go:190-275).
+@functools.cache
+def _key_hash(keys: tuple[str, ...]) -> Column:
+    return F.xxhash64(*[F.col(k) for k in keys])
 
-    `dedup_keys` overrides the duplicate-window key (default the stable
-    (conv_id, turn_idx) turn id) — journald uses a full 64-bit payload hash
-    so hash truncation can never merge distinct messages."""
-    df = transcripts
-    if dedup:
-        df = _dedup_turns(df, dedup_keys)
 
+@functools.cache
+def _input_cols(strip_ansi: bool) -> dict[str, Column]:
     text = F.col("text")
     if strip_ansi:
         text = F.regexp_replace(F.coalesce(text, F.lit("")), ANSI_RE, "")
+    return {"_text": text, "log_pattern_key": resolve_pattern_key(F.col("tool"))}
 
-    df = df.withColumns({
-        "_text": text,
-        "log_pattern_key": resolve_pattern_key(F.col("tool")),
-    })
-    df = df.withColumns({
+
+@functools.cache
+def _parse_cols() -> dict[str, Column]:
+    return {
         "_parsed": parse_turns(F.col("_text"), F.col("log_pattern_key")),
         "_j": F.when(F.col("log_pattern_key") == "Ecs", parse_ecs_json(F.col("_text"))),
-    })
+    }
 
+
+@functools.cache
+def _envelope_cols(subject: str, has_fallback_level: bool) -> dict[str, Column]:
+    """The envelope assembly; the fallback level is read from the
+    `_fallback_level` input column when unify() was given one."""
     is_ecs = F.col("log_pattern_key") == "Ecs"
     j = F.col("_j")
     p = F.col("_parsed")
@@ -205,8 +177,9 @@ def unify(
     ecs_level = F.when(_e(j, "log").isNull(), F.lit("not_set")).otherwise(
         F.coalesce(F.element_at(_level_alias_map(), F.lower(_e(j, "log", "level"))),
                    F.lit("unknown")))
+    fallback_level = F.col("_fallback_level") if has_fallback_level else F.lit("unknown")
 
-    df = df.withColumns({
+    return {
         # id quirk preserved: reference never fills an empty id
         # (journald.go:191-193 / ecs.go:45-47 — inverted emptiness check);
         # when the input DID carry one it is replaced (deterministically here:
@@ -225,10 +198,7 @@ def unify(
         "tags": ecs_or(_e(j, "tags"), F.lit(None).cast("array<string>")),
         "labels": ecs_or(_e(j, "labels"), p["labels"]),
         "log_level": F.when(ecs_bad, F.lit("fatal")).otherwise(
-            ecs_or(ecs_level, F.coalesce(
-                p["level"],
-                fallback_level if fallback_level is not None
-                else F.lit("unknown")))),
+            ecs_or(ecs_level, F.coalesce(p["level"], fallback_level))),
         "log_level_emoji": F.lit(""),  # finalized by validate_and_fix
         "log_logger": ecs_or(_e(j, "log", "logger"), F.lit("")),
         "log_ingress": F.lit(subject),
@@ -266,7 +236,50 @@ def unify(
         "process_error_raw_data": F.col("_text"),
         "validation_errors": ecs_or(_e(j, "validationError", "errors"),
                                     F.lit(None).cast("string")),
-    })
+    }
+
+
+@functools.cache
+def _output_cols(with_sink: bool) -> tuple[Column, ...]:
+    names = ["conv_id", "turn_idx"] + [
+        f.name for f in UNIFIED_SCHEMA.fields if f.name not in ("conv_id", "turn_idx")
+    ]
+    if with_sink:
+        names.append("sink")
+    return tuple(F.col(c) for c in names)
+
+
+def unify(
+    transcripts: DataFrame,
+    pattern_labels: DataFrame | None = None,
+    subject: str = DEFAULT_SUBJECT,
+    strip_ansi: bool = False,
+    dedup: bool = True,
+    fallback_level: Column | None = None,
+    overrides: dict | None = None,
+    dedup_keys: list[str] | None = None,
+) -> DataFrame:
+    """Transcripts (conv_id, turn_idx, role, text, tool, ts) → unified rows
+    (UNIFIED_SCHEMA [+ sink/loki_labels/stream_key when pattern_labels given]).
+
+    `fallback_level` is the level used when no extractor set one (the
+    reference's MetaLog fallback, PRIORITY-derived for journald;
+    default 'unknown'). `overrides` (name → Column over the input frame)
+    are applied after envelope assembly but BEFORE enrich/validate — the
+    journald metadata-override hook (journald.go:190-275).
+
+    `dedup_keys` overrides the duplicate-window key (default the stable
+    (conv_id, turn_idx) turn id) — journald uses a full 64-bit payload hash
+    so hash truncation can never merge distinct messages."""
+    df = transcripts
+    if dedup:
+        df = _dedup_turns(df, dedup_keys)
+    if fallback_level is not None:
+        df = df.withColumn("_fallback_level", fallback_level)
+
+    df = df.withColumns(_input_cols(strip_ansi))
+    df = df.withColumns(_parse_cols())
+    df = df.withColumns(_envelope_cols(subject, fallback_level is not None))
 
     if overrides:
         df = df.withColumns(dict(overrides))
@@ -277,12 +290,7 @@ def unify(
         df = enrich_ops.enrich_with_pattern_labels(df, pattern_labels)
 
     df = validate_and_fix(df, fallback_ts_col="ts")
-    keep = ["conv_id", "turn_idx"] + [
-        f.name for f in UNIFIED_SCHEMA.fields if f.name not in ("conv_id", "turn_idx")
-    ]
-    if pattern_labels is not None:
-        keep.append("sink")
-    df = df.select(*keep)
+    df = df.select(*_output_cols(pattern_labels is not None))
 
     if pattern_labels is not None:
         df = df.withColumn("loki_labels", enrich_ops.loki_label_map())

@@ -17,7 +17,9 @@ from pyspark.sql import SparkSession
 def ship_package(spark: SparkSession) -> str:
     """Make `logunifier_spark` importable on every executor regardless of the
     driver's cwd — the programmatic equivalent of `spark-submit --py-files`.
-    Zips the package once per session and registers it with addPyFile."""
+    Zips the package once per process and registers it with addPyFile once
+    per SparkContext: a repeated addPyFile is ignored by Spark but logs an
+    "added already" WARN each time."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     base = os.path.join(tempfile.gettempdir(),
                         f"logunifier_spark_pyfiles_{os.getpid()}")
@@ -29,7 +31,9 @@ def ship_package(spark: SparkSession) -> str:
                         ignore=shutil.ignore_patterns("__pycache__"))
         shutil.make_archive(base, "zip", staging)
         shutil.rmtree(staging, ignore_errors=True)
-    spark.sparkContext.addPyFile(zip_path)
+    sc = spark.sparkContext
+    if os.path.basename(zip_path) not in sc._python_includes:  # noqa: SLF001
+        sc.addPyFile(zip_path)
     return zip_path
 
 

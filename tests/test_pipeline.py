@@ -200,16 +200,60 @@ def test_dedup_and_stable_order(spark):
         ("c1", 0, 1), ("c1", 1, 2), ("c2", 0, 1)]
 
 
+def test_dedup_in_memory_input(spark):
+    """A Range-backed input with duplicate keys is deduped exactly: one row
+    per key, the clean keys untouched, each duplicate key's winner one of
+    its own payloads, the same winner on every run."""
+    idx = F.col("id") % 100
+    df = spark.range(120).select(
+        F.lit("c0").alias("conv_id"), idx.cast("int").alias("turn_idx"),
+        F.lit("user").alias("role"),
+        F.concat(F.lit("line "), F.col("id").cast("string")).alias("text"),
+        F.lit("").alias("tool"), F.lit(BASE_TS).alias("ts"))
+
+    def texts():
+        return {r["turn_idx"]: r["message"] for r in unify(df).collect()}
+
+    got = texts()
+    assert sorted(got) == list(range(100))
+    for k, msg in got.items():
+        assert msg in ({f"line {k}", f"line {k + 100}"} if k < 20 else {f"line {k}"})
+    assert texts() == got
+
+
+def test_unify_plan_one_python_eval_no_rdd_scan(spark):
+    """A duplicate-free in-memory input plans the parse UDF once and reads
+    the default label table from the plan itself (no RDD scan, so no Python
+    worker task for the labels)."""
+    from logunifier_spark.fixtures import synth_transcripts
+    u = unify(synth_transcripts(spark, 2000, num_partitions=2),
+              pattern_labels=default_pattern_labels(spark))
+    agg = u.groupBy("sink", "log_level").agg(
+        F.count("*"), F.sum(F.length("message")), F.count("timestamp"))
+    assert sum(r[2] for r in agg.collect()) == 2000
+    plan = agg._jdf.queryExecution().executedPlan().executedPlan().toString()  # noqa: SLF001
+    assert (plan.count("ArrowEvalPython"), plan.count("ExistingRDD")) == (1, 0)
+
+
 def test_routing_deterministic(spark):
-    data = [("c%d" % i, j, "user", "plain", "", BASE_TS)
-            for i in range(5) for j in range(4)]
-    df = spark.createDataFrame(data, TRANSCRIPT_SCHEMA)
+    def frame(prefix, text):
+        data = [(f"{prefix}{i}", j, "user", text, "", BASE_TS)
+                for i in range(5) for j in range(4)]
+        return spark.createDataFrame(data, TRANSCRIPT_SCHEMA)
+
+    df, other = frame("c", "plain"), frame("d", "other line")
     labels = default_pattern_labels(spark)
-    a = unify(df, pattern_labels=labels).select(
-        "conv_id", "turn_idx", "sink", "route_partition", "stream_key")
-    b = unify(df, pattern_labels=labels).select(
-        "conv_id", "turn_idx", "sink", "route_partition", "stream_key")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    cols = ["conv_id", "turn_idx", "sink", "route_partition", "stream_key", "message"]
+    a = unify(df, pattern_labels=labels).select(*cols)
+    b = unify(df, pattern_labels=labels).select(*cols)
+    # a different frame through the same (cached) column templates: each
+    # result holds only its own input's rows
+    c = unify(other, pattern_labels=labels).select(*cols)
+    rows_a, rows_c = sorted(map(tuple, a.collect())), sorted(map(tuple, c.collect()))
+    assert rows_a == sorted(map(tuple, b.collect()))
+    assert {(r[0][0], r[5]) for r in rows_a} == {("c", "plain")}
+    assert {(r[0][0], r[5]) for r in rows_c} == {("d", "other line")}
+    assert len(rows_a) == len(rows_c) == 20
 
 
 def test_loki_label_map(spark):
